@@ -203,3 +203,23 @@ def test_asof_salted_strategies_agree_on_adversarial_skew(spark, probes, builds,
     assert unsalted == run("window", 1)   # every key over threshold -> salted
     assert unsalted == run("merge", None)
     assert unsalted == run("merge", 1)
+
+
+def test_merge_unmatched_probe_with_array_payload(spark):
+    """An unmatched probe in a non-empty bucket: ``pd.merge_asof`` fills its
+    array<float> payload with a float NaN, which Arrow cannot convert to a
+    list. The merge strategy must return a null payload, as window does."""
+    probe = spark.createDataFrame(
+        [("k", 3600, 1), ("k", 5 * 3600, 2)], "key string, ts long, pid long"
+    ).select("key", F.timestamp_seconds("ts").alias("ts"), "pid")
+    build = spark.createDataFrame(
+        [("k", 3 * 3600, [0.5, 1.5])], "key string, fts long, emb array<float>"
+    ).select("key", F.timestamp_seconds("fts").alias("fts"), "emb")
+
+    def run(strategy):
+        res = asof_join(probe, build, on=["key"], left_ts="ts", right_ts="fts", strategy=strategy)
+        return sorted((r["pid"], r["emb"], r["fts_asof"]) for r in res.collect())
+
+    window = run("window")
+    assert [(pid, emb) for pid, emb, _ in window] == [(1, None), (2, [0.5, 1.5])]
+    assert run("merge") == window

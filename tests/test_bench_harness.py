@@ -38,11 +38,11 @@ def bench():
     signal.signal(signal.SIGINT, saved[1])
 
 
-def _pair(lo_ips, hi_ips, source=None):
+def _pair(lo_ips, hi_ips, source=None, cores=(8, 32)):
     eff = hi_ips / (lo_ips * 4.0)
     rec = {
-        "lo": {"cores": 8, "images": 32000, "images_per_sec": lo_ips},
-        "hi": {"cores": 32, "images": 32000, "images_per_sec": hi_ips},
+        "lo": {"cores": cores[0], "images": 32000, "images_per_sec": lo_ips},
+        "hi": {"cores": cores[1], "images": 32000, "images_per_sec": hi_ips},
         "efficiency": round(eff, 3),
     }
     if source:
@@ -125,17 +125,22 @@ def test_retry_plan_budget_bound(bench_worker):
 
 
 def test_hunt_captures_filtered_by_geometry_and_age(bench, tmp_path):
+    # captures at this host's core counts (bench reads them from
+    # SPARK_GRAFT_CPUS), so the geometry filter passes on any host
+    def pair(lo_ips, hi_ips):
+        return _pair(lo_ips, hi_ips, cores=(bench.CORES_LO, bench.CPUS))
+
     log = tmp_path / "hunt.jsonl"
     rows = [
-        _pair(1018.6, 2898.0),                      # valid
+        pair(1018.6, 2898.0),                       # valid
         {"ts": 1.0, "host_ratio": 2.8},             # probe-only line: skipped
         "not json at all",                          # corrupt line: skipped
-        _pair(1049.6, 3025.4),                      # valid
+        pair(1049.6, 3025.4),                       # valid
     ]
-    wrong_images = _pair(500.0, 1800.0)
+    wrong_images = pair(500.0, 1800.0)
     wrong_images["lo"]["images"] = 16000            # smaller job: skipped
     rows.insert(2, wrong_images)
-    bigger = _pair(1060.0, 3400.0)                  # amortized geometry:
+    bigger = pair(1060.0, 3400.0)                   # amortized geometry:
     bigger["lo"]["images"] = bigger["hi"]["images"] = 96000   # accepted
     rows.append(bigger)
     with open(log, "w") as f:

@@ -246,10 +246,25 @@ def _asof_merge(
             direction="backward",
             allow_exact_matches=allow_exact,
         ).rename(columns=rename)
+        # unmatched probes get a float NaN in every right column, which Arrow
+        # cannot convert to a list (array<float> payloads): make those nulls
+        for c in right_cols:
+            if merged[c].dtype == object:
+                merged[c] = merged[c].where(merged[c].notna(), None)
         return merged[lcols + right_cols + [asof_ts]]
 
     grouped = lsel.groupBy("__bucket").cogroup(rsel.groupBy("__bucket"))
     return grouped.applyInPandas(merge, schema=schema)
+
+
+LEAKAGE_ERROR = "temporal leakage:"
+
+
+def _leaks(label_ts: str, asof_ts: str, strict: bool):
+    """Rows whose matched feature timestamp is not strictly before (or, for
+    ``strict=False``, not at or before) the label timestamp."""
+    later = F.col(asof_ts) >= F.col(label_ts) if strict else F.col(asof_ts) > F.col(label_ts)
+    return F.col(asof_ts).isNotNull() & later
 
 
 def assert_no_leakage(
@@ -257,9 +272,21 @@ def assert_no_leakage(
 ) -> None:
     """Zero-temporal-leakage gate (north rule): every matched feature timestamp
     must be strictly before (or ≤) its label timestamp. Raises on violation."""
-    cond = (
-        F.col(asof_ts) >= F.col(label_ts) if strict else F.col(asof_ts) > F.col(label_ts)
-    )
-    n = result.filter(F.col(asof_ts).isNotNull() & cond).count()
+    n = result.filter(_leaks(label_ts, asof_ts, strict)).count()
     if n:
-        raise AssertionError(f"temporal leakage: {n} rows with {asof_ts} {'>=' if strict else '>'} {label_ts}")
+        raise AssertionError(f"{LEAKAGE_ERROR} {n} rows with {asof_ts} {'>=' if strict else '>'} {label_ts}")
+
+
+def guard_no_leakage(
+    result: DataFrame, label_ts: str, asof_ts: str, strict: bool = True, key_cols: Sequence[str] = ()
+) -> DataFrame:
+    """``assert_no_leakage`` as a row-level guard inside the plan, for a caller
+    that materialises ``result`` anyway: every row passes unchanged, and the
+    first leaking row fails the job evaluating it (``raise_error``, message
+    starting ``LEAKAGE_ERROR`` and naming the row) — no separate pass over
+    the input. A write job that fails this way commits nothing."""
+    row = F.concat_ws(
+        " ", *[F.concat(F.lit(f"{c}="), F.col(c).cast("string")) for c in (*key_cols, label_ts, asof_ts)]
+    )
+    leak = F.raise_error(F.concat(F.lit(f"{LEAKAGE_ERROR} "), row))
+    return result.filter(F.when(_leaks(label_ts, asof_ts, strict), leak).otherwise(F.lit(True)))

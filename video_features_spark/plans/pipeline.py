@@ -12,9 +12,11 @@ owns the physical plan.
 
 from __future__ import annotations
 
+from collections.abc import Collection
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import SparkRuntimeException
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.embed import MODEL_REGISTRY
 
@@ -58,14 +60,11 @@ REQUIRED_IMAGE_COLS = ("image_id", "bytes", "fmt", "entity_id", "ts")
 REQUIRED_AUDIO_COLS = ("clip_id", "audio", "entity_id", "ts")
 REQUIRED_VIDEO_COLS = ("video_id", "video", "entity_id", "ts")
 REQUIRED_LABEL_COLS = ("entity_id", "label_ts")
+KEY = "entity_id"  # the as-of join key, and the checkpoint partition key
 
 
-def build(spark: SparkSession, spec: FeatureJobSpec) -> DataFrame:
-    """Assemble the flagship logical plan: scan → decode+embed (Arrow UDF) →
-    strict as-of join → leakage-safe training rows. Pure plan construction —
-    nothing executes until the caller writes/collects."""
-    from ..operators.asof import asof_join
-    from ..operators.features import extract_image_features
+def _read_inputs(spark: SparkSession, spec: FeatureJobSpec) -> tuple[DataFrame, DataFrame]:
+    """The validated spec's (media, labels) snapshot reads, schema-checked."""
     from ..sources.tables import read_snapshot
 
     spec.validate()
@@ -82,10 +81,39 @@ def build(spark: SparkSession, spec: FeatureJobSpec) -> DataFrame:
     for c in REQUIRED_LABEL_COLS:
         if c not in labels.columns:
             raise ValueError(f"labels table missing column {c!r}")
+    return media, labels
 
+
+def _pending(
+    media: DataFrame, labels: DataFrame, num_parts: int, skip_parts: Collection[int]
+) -> tuple[DataFrame, DataFrame]:
+    """Both scans without the rows of the checkpoint parts in ``skip_parts``.
+    The part id must equal the one ``checkpointed_write`` gives the joined
+    output, so it hashes the key cast to the type that output carries: the
+    as-of join unions the two sides, which widens their key types."""
+    if not skip_parts:
+        return media, labels
+    from ..sources.checkpoint import part_id
+
+    key_type = labels.select(KEY).unionByName(media.select(KEY)).schema[KEY].dataType
+    pending = ~part_id([F.col(KEY).cast(key_type)], num_parts).isin(*skip_parts)
+    return media.filter(pending), labels.filter(pending)
+
+
+def build(
+    spark: SparkSession, spec: FeatureJobSpec, skip_parts: Collection[int] = ()
+) -> DataFrame:
+    """Assemble the flagship logical plan: scan → decode+embed (Arrow UDF) →
+    strict as-of join → leakage-safe training rows. Pure plan construction —
+    nothing executes until the caller writes/collects. Rows of the checkpoint
+    parts (of ``spec.num_parts``) in ``skip_parts`` are filtered out of both
+    scans, below every Python stage: Catalyst cannot push a filter through a
+    Python map node, so one applied to the output would still embed them."""
+    from ..operators.asof import asof_join
+    from ..operators.features import extract_image_features
+
+    media, labels = _pending(*_read_inputs(spark, spec), spec.num_parts, skip_parts)
     if spec.modality == "audio":
-        from pyspark.sql import functions as F
-
         from ..operators.audio import extract_audio_features
 
         # clip-level feature = the first 0.96 s example's embedding (one row
@@ -95,8 +123,6 @@ def build(spark: SparkSession, spec: FeatureJobSpec) -> DataFrame:
             F.col("error").isNull() & (F.col("example_idx") == 0)
         )
     elif spec.modality == "video":
-        from pyspark.sql import functions as F
-
         from ..operators.video import extract_video_frames
 
         # container -> frame stream -> the SAME image embed operator; each
@@ -132,17 +158,40 @@ def build(spark: SparkSession, spec: FeatureJobSpec) -> DataFrame:
 
 
 def run(spark: SparkSession, spec: FeatureJobSpec) -> dict:
-    """Execute the spec end-to-end with the leakage gate + checkpointed write;
-    returns the writer's resume stats. Re-run after failure to resume."""
-    from ..operators.asof import assert_no_leakage
-    from ..sources.checkpoint import checkpointed_write
+    """Execute the spec end-to-end into its checkpointed output base and
+    return the writer's resume stats; re-run after a failure to resume.
 
-    joined = build(spark, spec)
-    assert_no_leakage(joined, "label_ts", "ts_asof", strict=spec.strict)
-    return checkpointed_write(
-        joined,
-        spec.output_path,
-        ["entity_id"],
-        num_parts=spec.num_parts,
-        snapshot_id=spec.snapshot_id,
+    One embed pass: the parts the manifest marks done are read before
+    planning and filtered out of both scans below the Python stage, so each
+    pending image is decoded and embedded exactly once and committed ones not
+    at all. A base with every label's part committed is a no-op: nothing is
+    built or written. The leakage gate is fused into the write
+    (``guard_no_leakage``): every written row is checked before commit, and a
+    leak fails the write with ``AssertionError`` before any data or manifest
+    row lands."""
+    from ..operators.asof import LEAKAGE_ERROR, guard_no_leakage
+    from ..sources.checkpoint import checkpointed_write, resume_state
+
+    done, _ = resume_state(spark, spec.output_path, spec.snapshot_id)
+    if done:
+        # output rows are exactly the label rows (left-outer as-of join)
+        _, labels = _pending(*_read_inputs(spark, spec), spec.num_parts, done)
+        if labels.isEmpty():
+            return {"parts_total": spec.num_parts, "parts_skipped": len(done),
+                    "parts_written": 0, "rows_written": 0}
+    joined = guard_no_leakage(
+        build(spark, spec, skip_parts=done), "label_ts", "ts_asof", strict=spec.strict, key_cols=[KEY]
     )
+    try:
+        return checkpointed_write(
+            joined,
+            spec.output_path,
+            [KEY],
+            num_parts=spec.num_parts,
+            snapshot_id=spec.snapshot_id,
+        )
+    except SparkRuntimeException as e:
+        msg = (e.getMessageParameters() or {}).get("errorMessage", "")
+        if e.getCondition() != "USER_RAISED_EXCEPTION" or not msg.startswith(LEAKAGE_ERROR):
+            raise
+        raise AssertionError(msg) from e

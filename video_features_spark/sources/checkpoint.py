@@ -20,10 +20,15 @@ Design
   partitioning-independent).
   A partition whose data wrote but whose manifest row didn't (crash between
   the two) is simply recomputed and overwritten — safe, never corrupt.
-- Resume = left ANTI-join of the input's partition ids against the manifest's
-  completed ids: only missing partitions are computed. The expensive stage
-  (decode/embed UDFs) never runs for completed partitions because the filter
-  sits below it in the plan.
+- Resume = filter the input's partition ids against the manifest's completed
+  ids (``resume_state`` reads them in one action): only missing partitions
+  are written. Catalyst pushes that filter through projections, joins, unions
+  and windows, but NOT through a Python map node (``mapInArrow`` /
+  ``mapInPandas``): the filter ``checkpointed_write`` adds stops above it, and
+  the Python stage still runs for every row. A caller with a Python stage
+  must apply ``part_id`` to the stage's INPUT itself (``plans.run`` filters
+  both scans before decode/embed), computed over the key type the written
+  output carries.
 - ``verify_manifest`` recounts + re-checksums the data and reports drift —
   the "loads without error" half of the reference's check, done with
   aggregates instead of re-reading into the model.
@@ -34,7 +39,7 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 PART_COL = "__part"
 
@@ -75,10 +80,15 @@ def _resolve_manifest_dir(base: str) -> str:
     return _manifest_path(base) if gen is None else _gen_dir(base, gen)
 
 
-def with_partition_id(df: DataFrame, key_cols: Sequence[str], num_parts: int) -> DataFrame:
+def part_id(key_cols: Sequence[str | Column], num_parts: int) -> Column:
     """Deterministic partition id from the entity key — same key always lands
-    in the same part regardless of cluster size or input order."""
-    return df.withColumn(PART_COL, F.pmod(F.xxhash64(*key_cols), F.lit(num_parts)).cast("int"))
+    in the same part regardless of cluster size or input order. The hash
+    depends on the key's TYPE (an int and a long of equal value hash apart)."""
+    return F.pmod(F.xxhash64(*key_cols), F.lit(num_parts)).cast("int")
+
+
+def with_partition_id(df: DataFrame, key_cols: Sequence[str], num_parts: int) -> DataFrame:
+    return df.withColumn(PART_COL, part_id(key_cols, num_parts))
 
 
 def _content_checksum(cols: Sequence[str]):
@@ -104,6 +114,22 @@ def load_manifest(spark: SparkSession, base_path: str) -> DataFrame | None:
         return None
 
 
+def resume_state(spark: SparkSession, base_path: str, snapshot_id: str) -> tuple[frozenset, int]:
+    """(part ids ``snapshot_id`` has committed, the next ``manifest_seq``),
+    read in one action; (empty, 0) when the base has no manifest yet. The
+    write sequence is monotone: verify_manifest trusts only the LATEST row per
+    partition, so re-writing a base with a new snapshot never leaves stale
+    rows that report false drift."""
+    manifest = load_manifest(spark, base_path)
+    if manifest is None:
+        return frozenset(), 0
+    row = manifest.agg(
+        F.collect_set(F.when(F.col("snapshot_id") == snapshot_id, F.col(PART_COL))).alias("done"),
+        F.max("manifest_seq").alias("seq"),
+    ).first()
+    return frozenset(row["done"]), (row["seq"] or 0) + 1
+
+
 def checkpointed_write(
     df: DataFrame,
     base_path: str,
@@ -118,23 +144,7 @@ def checkpointed_write(
     """
     spark = df.sparkSession
     keyed = with_partition_id(df, key_cols, num_parts)
-
-    manifest = load_manifest(spark, base_path)
-    done: set[int] = set()
-    seq = 0
-    if manifest is not None:
-        done = {
-            r[PART_COL]
-            for r in manifest.filter(F.col("snapshot_id") == snapshot_id)
-            .select(PART_COL)
-            .distinct()
-            .collect()
-        }
-        # monotone write sequence: verify_manifest trusts only the LATEST row
-        # per partition, so re-writing a base with a new snapshot never leaves
-        # stale rows that report false drift
-        seq = (manifest.agg(F.max("manifest_seq")).first()[0] or 0) + 1
-
+    done, seq = resume_state(spark, base_path, snapshot_id)
     todo = keyed.filter(~F.col(PART_COL).isin(*done)) if done else keyed
     out_cols = [c for c in keyed.columns if c != PART_COL]
 
